@@ -16,7 +16,6 @@ import org.apache.spark.sql.functions._
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // host state AT START (VERDICT r9 item 4): idleness matters when the
     // timings begin, not at report time. A loaded host or a foreign JVM
     // alive NOW is what poisons the numbers — flag the whole record.
@@ -43,39 +42,12 @@ object Bench {
       strayAtStart = strayJvms()
     }
     val contaminated = busy
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // size input splits for TEXT-EXPANDING parquet (the 100 TB knob the
-      // task calls out): documents.parquet compresses ~3:1 and the default
-      // 128 MB split put the ENTIRE sf10 corpus in ONE scan task — e16's
-      // per-char regex then ran single-core and its orderBy's range
-      // sampling paid the scan twice (19× at 10× rows, round-19 probe).
-      // 16 MB splits parallelize to row-group granularity; files under
-      // 16 MB (every sf0.1 table) are unaffected. Overridable (ADVICE
-      // r19): a real cluster with many files may want the 128m default
-      // back — set SPARK_GRAFT_MAX_PARTITION_BYTES.
-      // partitioned index/code layouts use up to nlist=64 `cid=` dirs; the
-      // default parallelPartitionDiscovery threshold (32) turns every such
-      // listing into a 64-task Spark JOB. 128 keeps those listings on the
-      // driver's own listing pool — ~ms on any FS at that dir count (r22)
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "128")
-      // let AQE size cached-plan partitions from the DATA (r22): the
-      // default pins every persisted stage at the static shuffle count
-      // (32 here), so each cache consumer pays 32 near-empty tasks on a
-      // KB-scale cached stage — the measured 8c-beats-32c inversion on
-      // the pipeline capstones. `true` is scale-adaptive by
-      // construction: AQE only coalesces when partitions are small, a
-      // 100 TB cached stage keeps its width. Overridable for A/Bs.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_AQE", "true"))
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.etl.Sessions.runner()
+    // the record names its own context: the slots and master the session
+    // actually got, and the subset filter (null on a full run)
+    val cpus = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val master = spark.sparkContext.master
+    val onlyFilter = sys.env.get("SPARK_GRAFT_ONLY")
     // environment fingerprint for cross-run comparability (heap pressure /
     // CPU contention are the usual causes of bench divergence)
     System.err.println(s"[bench] maxHeap=${Runtime.getRuntime.maxMemory() / (1 << 20)}MiB " +
@@ -83,7 +55,7 @@ object Bench {
     // one warmup action so JVM/codegen startup isn't billed to the first query
     SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
     // optional prefix filter for local iteration, e.g. SPARK_GRAFT_ONLY=e02,e05
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
+    val only = onlyFilter.map(_.split(",").toSeq)
     val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (n, _) =>
       only.forall(_.exists(n.startsWith))
     }
@@ -153,8 +125,10 @@ object Bench {
       (name, times)
     }
     // CROSS-RUN drift baseline (VERDICT r16 #4): best historical per-query
-    // MIN from CLEAN records at the SAME scale dir in BENCH_HISTORY.jsonl.
-    // Computed BEFORE the re-run pass below, which consumes it.
+    // MIN from CLEAN FULL-RUN records at the SAME scale dir and core
+    // count in BENCH_HISTORY.jsonl (records without `cpus` predate the
+    // field and are skipped). Computed BEFORE the re-run pass below,
+    // which consumes it.
     val histBest: Map[String, Double] = {
       val f = java.nio.file.Paths.get("BENCH_HISTORY.jsonl")
       if (!java.nio.file.Files.exists(f)) Map.empty
@@ -163,7 +137,8 @@ object Bench {
         val qmRe = "\"queries_min\":\\{([^}]*)\\}".r
         val entRe = "\"([^\"]+)\":(-?[0-9.]+)".r
         scala.io.Source.fromFile(f.toFile)(scala.io.Codec.UTF8).getLines()
-          .filter(l => sfRe.findFirstIn(l).isDefined && l.contains("\"contaminated\":false"))
+          .filter(l => sfRe.findFirstIn(l).isDefined && l.contains("\"contaminated\":false") &&
+            l.contains(s"\"cpus\":$cpus,") && l.contains("\"only\":null"))
           .flatMap(l => qmRe.findFirstMatchIn(l).toSeq.flatMap(m =>
             entRe.findAllMatchIn(m.group(1)).map(e => e.group(1) -> e.group(2).toDouble)))
           .filter(_._2 > 0)
@@ -276,7 +251,8 @@ object Bench {
       s""""value":$total,"value_min":${f"$totalMin%.3f"},""" +
         s""""n_ok":${results.count(_.ok)},"n_queries":${results.size},""" +
         s""""sync_e2e_s":${f"$syncSec%.3f"},"peak_heap_mib":$peakHeapMib,""" +
-        s""""contaminated":$contaminated"""
+        s""""contaminated":$contaminated,"cpus":$cpus,"master":"$master",""" +
+        s""""only":${onlyFilter.fold("null")(f => "\"" + f.replace("\"", "'") + "\"")}"""
     val record =
       s"""{"metric":"conformance_total_s","unit":"sec",$headline,""" +
         s""""reps":$reps,"preflight_wait_s":$waitedS,"sync_fixture_s":${f"$fixtureSec%.3f"},""" +
@@ -327,8 +303,10 @@ object Bench {
     // FILE, so the driver/judge can ingest it without scraping stdout
     // at all — five rounds of `parsed: null` came from sbt's output
     // framing around the printed line (see build.sbt, which also fixes
-    // the stdout path via StdoutOutput + showSuccess := false)
-    try {
+    // the stdout path via StdoutOutput + showSuccess := false). Only a
+    // full run writes it: a SPARK_GRAFT_ONLY subset would otherwise
+    // replace the suite's summary with a partial one.
+    if (onlyFilter.isEmpty) try {
       java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_SUMMARY.json"),
         (summary + "\n").getBytes("UTF-8"))
     } catch { case e: Throwable =>

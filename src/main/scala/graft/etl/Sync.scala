@@ -100,16 +100,22 @@ object Sync {
     monthPred.foldLeft(base)(_.filter(_))
   }
 
+  /** Account (and region-rule) filter on the columns normalize will read:
+    * account and region resolve through [[Normalize.awsCur]], so a root
+    * with alternative column names is filtered like a primary-named one. */
   private def withAccountFilter(pruned: DataFrame, accountIds: Seq[String]): DataFrame = {
     val cols = pruned.columns.toSet
-    val acctPred =
-      if (!cols.contains("line_item_usage_account_id")) None
-      else if (cols.contains("product_region")) Accounts.predicate(accountIds)
-      // region column absent from this source: region-ruled accounts
-      // degrade to plain membership rather than an unresolvable column
-      else if (accountIds.nonEmpty)
-        Some(col("line_item_usage_account_id").isin(accountIds: _*))
-      else None
+    def resolved(target: String) =
+      Normalize.awsCur.find(_.target == target).flatMap(Normalize.resolve(_, cols))
+    val acctPred = resolved("account_id").flatMap { account =>
+      resolved("region") match {
+        case Some(region) => Accounts.predicate(accountIds, col(account), col(region))
+        // region column absent from this source: region-ruled accounts
+        // degrade to plain membership rather than an unresolvable column
+        case None if accountIds.nonEmpty => Some(col(account).isin(accountIds: _*))
+        case None => None
+      }
+    }
     acctPred.foldLeft(pruned)(_.filter(_))
   }
 

@@ -63,7 +63,6 @@ object Dedup {
     * perturb minima, so no distinct pass is needed. */
   def withMinhashSignature(df: DataFrame, text: Column, k: Int = 32,
       shingleWidth: Int = 3): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.withColumn("mh_sig",
       call_function("graft_minhash", shingleHashes(text, shingleWidth), lit(k)))
   }
@@ -199,7 +198,6 @@ object Dedup {
     * exchange (the per-doc min agg, map-side partial). */
   private[ext] def portableSignatures(df: DataFrame, idCol: String,
       textCol: String, k: Int, shingleWidth: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val fam = portableFamily(k)
     // r21 note: an Adaptive.fanOutSmall here was MEASURED SLOWER on the
     // pipeline queries (e27/e35/e38 +0.6-1.7 s): the shingle front's
@@ -692,9 +690,8 @@ object Dedup {
     * vote/sign loop are both native codegen'd expressions
     * ([[graft.functions.TokenHashes]] → [[graft.functions.SimHash64]]);
     * the HOF formulation (`transform(split(text," "), xxhash64)`)
-    * would force the whole stage to interpreted eval. Callers must have
-    * registered [[graft.functions.GraftFunctions]] (the ops in this
-    * object do). */
+    * would force the whole stage to interpreted eval. Needs the graft
+    * extensions on the session (see [[graft.etl.Sessions.runner]]). */
   def simhash64(text: Column): Column =
     call_function("graft_simhash64", call_function("graft_token_hashes", text))
 
@@ -721,7 +718,6 @@ object Dedup {
       df: DataFrame, idCol: String, textCol: String,
       chunks: Int = 4, maxHamming: Int = 3,
       simhashCol: Column => Column = simhash64): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val width = 64 / chunks
     val sh = df.select(col(idCol).as("doc"), simhashCol(col(textCol)).as("sh"))
     val chunkCols = (0 until chunks).map { c =>
@@ -997,7 +993,6 @@ object Dedup {
       df: DataFrame, idCol: String, textCol: String, sourceCol: String,
       evalSource: String, trainSource: String,
       shingleWidth: Int = 3, threshold: Double = 0.2): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val hashes = array_distinct(shingleHashes(col(textCol), shingleWidth))
     // distinct (doc, shingle) pairs: duplicate doc-id rows (same id, any
     // text) contribute ONE set per id, matching the oracle's
@@ -1070,7 +1065,6 @@ object Dedup {
       evalSource: String, trainSource: String,
       shingleWidth: Int = 3, threshold: Double = 0.0,
       estItems: Long = 1L << 20, numBits: Long = 1L << 23): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val hashes = array_distinct(shingleHashes(col(textCol), shingleWidth))
     def bloomOf(sh: DataFrame): Array[Byte] = sh
       .agg(call_function("graft_bloom_agg",
@@ -1128,7 +1122,6 @@ object Dedup {
       df: DataFrame, idCol: String, textCol: String,
       shingleWidth: Int = 3, threshold: Double = 0.5,
       maxDf: Int = 10000): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val hashes = array_distinct(shingleHashes(col(textCol), shingleWidth))
     val sizes = df.select(col(idCol).as("doc"), size(hashes).as("n"))
     val tok = df.select(col(idCol).as("doc"), explode(hashes).as("sh"))
@@ -1258,7 +1251,6 @@ object Dedup {
       k: Int = 5, minDf: Int = 2, trimAt: Double = 0.5): DataFrame = {
     require(k > 0 && minDf >= 2 && trimAt >= 0.0,
       s"span geometry out of range: k=$k minDf=$minDf trimAt=$trimAt")
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     // one fingerprint per window POSITION (multiset, unlike [[shingles]]'
     // distinct set): coverage counts positions, so a doc that repeats a
     // shared span twice is twice as covered

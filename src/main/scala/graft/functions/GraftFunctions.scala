@@ -1,19 +1,18 @@
 package graft.functions
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
-/** Registration for the engine's native expressions — both wiring
-  * styles Spark supports:
+/** The engine's native expressions, installed into every session by
+  * the `spark.sql.extensions` entry point [[GraftExtensions]]
+  * (`spark.sql.extensions=graft.functions.GraftExtensions`).
+  * [[graft.etl.Sessions.runner]] sets it; library callers that build
+  * their own session set it themselves. Sessions derived with
+  * `newSession()` inherit the extensions.
   *
-  *  - `spark.sql.extensions=graft.GraftExtensions` at session build
-  *    (the SparkSessionExtensions path, used by Main);
-  *  - [[GraftFunctions.register]] on a live session (idempotent; called
-  *    by query entry points so the library works on any session).
-  *
-  * Either way `graft_dot_f32(a, b)` becomes available to SQL and to
-  * `call_function` in the DataFrame API.
+  * Once installed, `graft_dot_f32(a, b)` and the rest are available to
+  * SQL and to `call_function` in the DataFrame API.
   */
 object GraftFunctions {
 
@@ -290,12 +289,8 @@ object GraftFunctions {
     (books, ints)
   }
 
-  /** Idempotent runtime registration into the session's function
-    * registry. */
-  def register(spark: SparkSession): Unit =
-    fns.foreach { case (ident, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
-    }
+  /** Names of the functions [[GraftExtensions]] installs. */
+  val names: Seq[String] = fns.map(_._1.funcName)
 
   private[functions] def inject(ext: SparkSessionExtensions): Unit =
     fns.foreach(ext.injectFunction(_))

@@ -3,32 +3,17 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (one JVM under Test/fork). Config
-  * matches Verify/Bench: UTC, ANSI on, nanos legacy read. */
+/** Shared local session for all suites (one JVM under Test/fork): the
+  * runner session every main builds, pinned to `local[4]` so the suite
+  * does not depend on SPARK_GRAFT_CPUS / SPARK_GRAFT_MASTER. */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def sf001 = "/root/testdata/sf0.001"
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      // matches the runner sessions (r22): AQE may re-size cached-plan
-      // partitions, so the plan-asserted invariants test what ships
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_test_wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    // native graft_* expressions available to every suite (idempotent —
-    // the same registration every declared-query entry point performs)
-    graft.functions.GraftFunctions.register(s)
-    s
-  }
+  lazy val session: SparkSession = graft.etl.Sessions.runner(
+    cpus = 4, master = Some("local[4]"),
+    configure = _.config("spark.sql.warehouse.dir",
+      java.nio.file.Files.createTempDirectory("graft_test_wh").toString))
 }

@@ -250,6 +250,55 @@ class SyncE2ESpec extends SparkSpec {
     assert(log == Seq(("cur_acct1", "success"), ("cur_acct2", "warning")), log.toString)
   }
 
+  test("alternative-named CUR root is account- and region-filtered like a primary-named one") {
+    // a root exported under the alternative names normalize resolves
+    // (lineitem_usageaccountid, product_location, ...), holding a
+    // non-registry account and the region-ruled account in every region
+    val root = Files.createTempDirectory("graft_cur_alt").toString
+    val ids = Accounts.registry.map(_.id) :+ "000000000000"
+    val ruled = "905174205951"
+    T.events(spark, sf001).select(
+      col("ts").as("lineitem_usagestartdate"),
+      element_at(
+        typedlit(ids), (pmod(col("user_id"), lit(ids.size)) + 1).cast("int")
+      ).as("lineitem_usageaccountid"),
+      col("event_type").as("product_productname"),
+      element_at(typedlit(Seq("us-east-1", "eu-west-2", "ap-southeast-2")),
+        (pmod(xxhash64(col("ts")), lit(3)) + 1).cast("int")).as("product_location"),
+      col("value").as("lineitem_unblendedcost"),
+      lit("USD").as("lineitem_currencycode"),
+      year(col("ts")).as("year"),
+      month(col("ts")).as("month"))
+      .write.partitionBy("year", "month").parquet(s"$root/cur-b")
+    def foreign(df: org.apache.spark.sql.DataFrame, acct: String, region: String) =
+      df.filter(!col(acct).isin(Accounts.activeIds(): _*) ||
+        (col(acct) === ruled && col(region) =!= "ap-southeast-2")).count()
+    val src = spark.read.parquet(s"$root/cur-b")
+      .filter(col("year") === 2024 && col("month") === 1)
+    assert(foreign(src, "lineitem_usageaccountid", "product_location") > 0,
+      "fixture must hold rows the account filter has to drop")
+
+    val wh = Files.createTempDirectory("graft_wh").toString
+    val loader = new ParquetLoader(wh, "s")
+    val c = EngineConfig(
+      sourceRoot = s"file://$root", curPaths = Seq("cur-b"),
+      warehouseDir = wh, jdbcUrl = None, jdbcUser = "", jdbcPassword = "",
+      schema = "s", syncMonths = 1, logLevel = "WARN")
+    spark.catalog.dropTempView("costs")
+    val res = Sync.run(spark, c, loader,
+      Sync.Options(months = 1, asOf = LocalDate.parse("2024-01-15")))
+    assert(res.tables.map(_.status) == Seq("success"), s"${res.tables}")
+    val raw = loader.table(spark, "raw_cur_b")
+    val norm = loader.table(spark, "cur_b_normalized")
+    assert(raw.count() > 0 && norm.count() == raw.count())
+    assert(foreign(raw, "lineitem_usageaccountid", "product_location") == 0,
+      "raw kept non-registry accounts or off-region rows of the ruled account")
+    assert(foreign(norm, "account_id", "region") == 0)
+    // exactly the rows the registry and region rule admit
+    assert(raw.count() == src.count() -
+      foreign(src, "lineitem_usageaccountid", "product_location"))
+  }
+
   test("incremental sync accumulates months; replace mode keeps window-only semantics") {
     // the 100 TB shape: month N's sync must not rewrite months 1..N-1.
     // Fixture holds January + February; sync each month separately in

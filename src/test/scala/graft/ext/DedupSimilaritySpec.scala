@@ -132,7 +132,6 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("native shingle/token hashes equal the HOF formulation element-for-element") {
-    graft.functions.GraftFunctions.register(spark)
     // shingle ranges: hashing the byte range must equal hashing the
     // concat_ws-joined words (single-space separators reproduce bytes)
     val shMismatch = docs.select(
@@ -155,7 +154,6 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("native portable word hashes equal the HOF md5 formulation element-for-element") {
-    graft.functions.GraftFunctions.register(spark)
     val mismatch = docs.select(
       call_function("graft_portable_words", col("text")).as("nat"),
       transform(split(col("text"), " "), w => Dedup.portableHash64(w)).as("hof"))
@@ -173,7 +171,6 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("native 60-bit window hashes equal the HOF md5 formulation element-for-element") {
-    graft.functions.GraftFunctions.register(spark)
     val k = 5
     // the oracle-side formulation: space-joined k-token windows (short
     // docs collapse to one whole-text window via the concat_ws NULL
@@ -608,7 +605,6 @@ class DedupSimilaritySpec extends SparkSpec {
     val hof = when(ma === 0.0, transform(col("embedding"), _ => lit(0f)))
       .otherwise(transform(col("embedding"),
         x => (xd(x) * 127.0 / ma).cast(IntegerType).cast(FloatType)))
-    graft.functions.GraftFunctions.register(spark)
     val nullF = lit(null).cast(FloatType)
     val edgeVecs = spark.range(1).select(lit(9999L).as("vec_id"),
       array(lit(0f), lit(-0f), lit(0f)).as("embedding"))
