@@ -48,6 +48,7 @@ object Bench {
     val cpus = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val master = spark.sparkContext.master
     val onlyFilter = sys.env.get("SPARK_GRAFT_ONLY")
+    val gitSha = headSha()
     // environment fingerprint for cross-run comparability (heap pressure /
     // CPU contention are the usual causes of bench divergence)
     System.err.println(s"[bench] maxHeap=${Runtime.getRuntime.maxMemory() / (1 << 20)}MiB " +
@@ -252,7 +253,8 @@ object Bench {
         s""""n_ok":${results.count(_.ok)},"n_queries":${results.size},""" +
         s""""sync_e2e_s":${f"$syncSec%.3f"},"peak_heap_mib":$peakHeapMib,""" +
         s""""contaminated":$contaminated,"cpus":$cpus,"master":"$master",""" +
-        s""""only":${onlyFilter.fold("null")(f => "\"" + f.replace("\"", "'") + "\"")}"""
+        s""""only":${onlyFilter.fold("null")(f => "\"" + f.replace("\"", "'") + "\"")},""" +
+        s""""git_sha":${gitSha.fold("null")(h => "\"" + h + "\"")}"""
     val record =
       s"""{"metric":"conformance_total_s","unit":"sec",$headline,""" +
         s""""reps":$reps,"preflight_wait_s":$waitedS,"sync_fixture_s":${f"$fixtureSec%.3f"},""" +
@@ -320,6 +322,13 @@ object Bench {
     def signedMedian: Double = if (ok) median else -median
     def signedMin: Double = if (ok) min else -min
   }
+
+  /** The checked-out commit (`git rev-parse HEAD` in the working
+    * directory), None outside a git checkout or without git. */
+  private def headSha(): Option[String] =
+    try Some(scala.sys.process.Process(Seq("git", "rev-parse", "HEAD"))
+      .!!(scala.sys.process.ProcessLogger(_ => ())).trim)
+    catch { case _: Throwable => None }
 
   /** Host load average (1/5/15 min), empty on any read failure. Captured
     * at START for the contamination verdict and again at report time for

@@ -22,6 +22,10 @@ import org.apache.spark.sql.types.StructType
   *    cluster;
   *  - `foreachBatch` reuses the batch [[Loader]] (append mode), so the
   *    serving contract is identical for batch and streaming ingestion;
+  *  - each micro-batch is materialized once, in a scope the sink body
+  *    owns and releases in `finally` ([[incrementalSync]]): the upstream
+  *    stateful stage runs once per batch, so its progress state metrics
+  *    count each row once;
   *  - `Trigger.AvailableNow` gives the cron semantics (drain everything
   *    new, then stop) with streaming exactly-once bookkeeping.
   */
@@ -29,14 +33,17 @@ object StreamingSync {
 
   /** Streaming variant of the CUR source: new parquet files under
     * `root` (schema pinned from a batch probe — required by file
-    * streams; pass a saved schema at 100 TB to avoid the probe).
+    * streams; pass a saved schema at 100 TB to avoid the probe). The
+    * probe merges every footer, as the batch scans do (`Sync.prunedScan`,
+    * [[graft.etl.CurSource]]): a column that first appears in a later
+    * file reaches the stream.
     * Entering the streaming pipeline puts the session's state on the
     * RocksDB backend ([[StateBackend.configure]], idempotent): every
     * stateful op downstream of this source (dedup, windows, joins)
     * gets disk-bounded state instead of the on-heap default. */
   def readCurStream(spark: SparkSession, root: String, schema: Option[StructType] = None): DataFrame = {
     StateBackend.configure(spark)
-    val sch = schema.getOrElse(spark.read.parquet(root).schema)
+    val sch = schema.getOrElse(spark.read.option("mergeSchema", "true").parquet(root).schema)
     spark.readStream.schema(sch).option("maxFilesPerTrigger", 16).parquet(root)
   }
 
@@ -74,13 +81,21 @@ object StreamingSync {
     raw.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          loader.load(batch, s"raw_$table", ifExists = "append")
-          loader.load(
-            Normalize.normalize(batch, Normalize.awsCur, table, lit(syncTs)),
-            s"${table}_normalized", ifExists = "append")
-        }
-        ()
+        // the micro-batch is an uncached view of the upstream stateful
+        // plan: every action on it re-runs that stage (a dedup reloads and
+        // re-commits each state store), and the two loads run four
+        // actions. Persist once; one count fills the cache and answers
+        // emptiness.
+        val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try {
+          if (b.count() > 0) {
+            loader.load(b, s"raw_$table", ifExists = "append")
+            loader.load(
+              Normalize.normalize(b, Normalize.awsCur, table, lit(syncTs)),
+              s"${table}_normalized", ifExists = "append")
+          }
+          ()
+        } finally { b.unpersist(blocking = false); () }
       }
   }
 
